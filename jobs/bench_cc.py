@@ -1,7 +1,9 @@
 """Connected-components scale exercise (SURVEY.md §2.10 G1; roadmap item
-"bigger CC scale"): run the distributed alternating-star loop on a
-million-edge alias graph with adversarial structure, verify EXACT equality
-against driver union-find, and record wall/rounds.
+"bigger CC scale"): run distributed CC on a million-edge alias graph with
+adversarial structure, verify EXACT equality against driver union-find,
+and record wall/rounds. The input is dealt round-robin over partitions, so
+components cross partitions and the alternating-star loop runs after the
+per-partition contraction.
 
 Graph mix (seeded, deterministic):
   - `--pairs` 2-node components (the overwhelmingly common alias case)
@@ -58,21 +60,19 @@ def build_edges(args) -> list[tuple[str, str]]:
 
 
 def skew_experiment(args) -> None:
-    """Roadmap item 'skew-aware large-star salting measurements': on a
-    hub-DOMINATED graph (one star holding ~85% of all edges — the worst
-    case for the star steps' edge⋈min join, whose probe side hashes every
-    hub edge to ONE partition), measure three ways of running the same CC:
+    """Hub-skew measurement: on a hub-DOMINATED graph (one star holding
+    ~85% of all edges — the worst case for the star steps' edge⋈min join,
+    whose probe side hashes every hub edge to ONE partition), run the same
+    CC two ways:
 
-      baseline   join_salts=0, stock AQE (the hub partition is tens of MB —
-                 BELOW AQE's 256MB skew-split threshold, so AQE does NOT
-                 split it: the hot task bounds every round's wall)
-      aqe-tuned  join_salts=0 + skewedPartitionThresholdInBytes/
-                 advisoryPartitionSizeInBytes lowered to 8MB so AQE's
-                 skew-split actually fires on the hub partition
-      salted     join_salts=8 (skew.salted_join inside both star steps:
-                 probe salted by row hash, min table replicated ×8)
+      baseline   stock AQE (the hub partition is tens of MB — BELOW AQE's
+                 256MB skew-split threshold, so AQE does NOT split it: the
+                 hot task bounds every round's wall)
+      aqe-tuned  skewedPartitionThresholdInBytes/advisoryPartitionSizeInBytes
+                 lowered to 8MB so AQE's skew-split actually fires on the
+                 hub partition
 
-    All three must produce the EXACT union-find map. Results append to
+    Both must produce the EXACT union-find map. Results append to
     BENCH/CC.md."""
     from mxsparkg.graph import _driver_cc, connected_components
     from mxsparkg.session import get_spark
@@ -101,20 +101,14 @@ def skew_experiment(args) -> None:
     defaults = {k: spark.conf.get(k) for k in aqe_tuning}
 
     results = {}
-    for name, salts, confs in (
-        ("baseline", 0, {}),
-        ("aqe_tuned", 0, aqe_tuning),
-        ("salted_x8", 8, {}),
-    ):
+    for name, confs in (("baseline", {}), ("aqe_tuned", aqe_tuning)):
         for k, v in confs.items():
             spark.conf.set(k, v)
         walls = []
         for _rep in range(args.skew_reps):
             stats: dict = {}
             t0 = time.time()
-            cc = connected_components(
-                df, driver_threshold=0, stats=stats, join_salts=salts
-            )
+            cc = connected_components(df, driver_threshold=0, stats=stats)
             got = {(r["entity_id"], r["canon_id"]) for r in cc.collect()}
             walls.append(round(time.time() - t0, 2))
             assert got == expected, f"{name}: CC result differs from union-find"
@@ -139,23 +133,20 @@ def skew_experiment(args) -> None:
     b = results["baseline"]["best"]
     md = f"""
 
-## Hub-skew experiment: salting vs AQE skew-split on the star-step join
+## Hub-skew experiment: AQE skew-split on the star-step join
 
 Graph: {n_edges} edges, ONE {args.star}-leaf hub (~{100 * args.star // n_edges}% of
-all edges), local[{args.cores}], {args.skew_reps} reps each, best wall kept. All
-three variants verified EXACT against driver union-find.
+all edges), local[{args.cores}], {args.skew_reps} reps each, best wall kept. Both
+variants verified EXACT against driver union-find.
 
 | variant | best wall | vs baseline | rounds |
 | --- | --- | --- | --- |
 | baseline (stock AQE, no salting) | {b}s | 1.00x | {results["baseline"]["rounds"]} |
 | AQE skew-split tuned to 8MB thresholds | {results["aqe_tuned"]["best"]}s | {round(b / results["aqe_tuned"]["best"], 2)}x | {results["aqe_tuned"]["rounds"]} |
-| salted join x8 (skew.salted_join in both stars) | {results["salted_x8"]["best"]}s | {round(b / results["salted_x8"]["best"], 2)}x | {results["salted_x8"]["rounds"]} |
 
 Reading: the hub's probe partition is ~{args.star * 40 // (1 << 20)}MB — stock AQE
 never splits it (256MB threshold), so any hot-task effect shows up
-undiluted in the baseline. `connected_components(join_salts=N)` turns on
-the salted path; AQE tuning is a config-only alternative on clusters
-where re-running jobs with salts is harder than lowering two thresholds.
+undiluted in the baseline; lowering the two AQE thresholds splits it.
 
 Regenerate: `python jobs/bench_cc.py --skew-exp --cores {args.cores} --star {args.star}`
 """
@@ -176,7 +167,7 @@ def main() -> None:
     ap.add_argument("--random-edges", type=int, default=500_000)
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH", "CC.md"))
     ap.add_argument("--skew-exp", action="store_true",
-                    help="run the hub-skew salting/AQE comparison and "
+                    help="run the hub-skew AQE comparison and "
                          "APPEND results to --out (main mode rewrites it)")
     ap.add_argument("--skew-reps", type=int, default=2)
     args = ap.parse_args()

@@ -3,9 +3,22 @@
 alternating large-star/small-star (Kiveris et al., "Connected Components in
 MapReduce and Beyond", SoCC 2014) as a pure DataFrame loop.
 
-Scale notes: converges in O(log n) rounds on any graph; each round is two
-shuffles (groupBy min + join). `localCheckpoint` per round truncates the
-otherwise-exponential lineage. High-degree roots are exactly what
+connected_components first contracts each input partition with a local
+union-find (one mapInArrow pass, no shuffle): every non-root node points at
+its partition-local component min. The contracted edges connect exactly the
+same node sets as the input. One groupBy over their leaf and root roles
+then decides the rest: if no node is a leaf with two different roots and no
+leaf is a root anywhere, the edges already form a star forest whose roots
+are the component minima, and that same aggregate is the canon map (no
+star rounds). Alias graphs whose clusters arrive colocated — sameas_edges
+builds each chain inside one groupBy group — always take this exit.
+Components that span partitions fall through to the star loop over the
+contracted edges, and the aggregate serves as the loop's first per-node min
+table, so the check adds no shuffle to that path.
+
+Scale notes: the loop converges in O(log n) rounds on any graph; each round
+is two shuffles (groupBy min + join). `localCheckpoint` per round truncates
+the otherwise-exponential lineage. High-degree roots are exactly what
 large-star is designed to flatten — and both star steps are formulated
 RELATIONALLY (per-node min via map-side-combinable groupBy + an equi-join
 of the edge list against that min table), never as per-node adjacency
@@ -17,8 +30,12 @@ join task without materializing, and AQE's skew-join split applies.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_CONTRACT_BATCH_ROWS = 65_536
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -26,25 +43,19 @@ def _sym(edges: DataFrame) -> DataFrame:
     return edges.unionByName(rev)
 
 
-def _min_join(probe: DataFrame, mins: DataFrame, join_salts: int) -> DataFrame:
-    """The star steps' edge⋈per-node-min equi-join on src. join_salts=0
-    (default): plain shuffle-hash (build side is one row per node, bounded
-    per partition; skipping the probe-side sort saves two O(E log E) sorts
-    per round × O(log n) rounds). join_salts=S: explicit salted join
-    (skew.salted_join — probe salted by row hash, min table replicated ×S)
-    for hubs hot enough that one probe partition dominates the round wall
-    but still below AQE's skew-split byte thresholds — see the measured
-    comparison in BENCH/CC.md."""
-    if join_salts:
-        from mxsparkg.skew import salted_join
-
-        return salted_join(probe, mins, on="src", n_salts=join_salts)
+def _min_join(probe: DataFrame, mins: DataFrame) -> DataFrame:
+    """The star steps' edge⋈per-node-min equi-join on src: plain
+    shuffle-hash (build side is one row per node, bounded per partition;
+    skipping the probe-side sort saves two O(E log E) sorts per round ×
+    O(log n) rounds). A hot hub partition is left to AQE's skew-join split
+    — explicit salting measured slower (BENCH/CC.md)."""
     return probe.join(mins.hint("shuffle_hash"), "src")
 
 
-def _large_star(edges: DataFrame, join_salts: int = 0) -> DataFrame:
+def _large_star(edges: DataFrame, mins: DataFrame | None = None) -> DataFrame:
     """For each node u: connect every strictly-larger neighbor to the min of
-    u's closed neighborhood.
+    u's closed neighborhood. `mins` (src, m) may pass in that per-node min
+    when the caller already holds it.
 
     Relational (skew-safe) form: m(u) = least(u, min over neighbors) is a
     map-side-combinable min agg — a 10^7-degree hub reduces to partial
@@ -53,18 +64,19 @@ def _large_star(edges: DataFrame, join_salts: int = 0) -> DataFrame:
     the hub's rows STREAM through the join instead of materializing as one
     collect_set array (the OOM shape this repo measured on rollup windows)."""
     sym = _sym(edges)
-    mins = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.col("src")).alias("m")
-    )
+    if mins is None:
+        mins = sym.groupBy("src").agg(
+            F.least(F.min("dst"), F.col("src")).alias("m")
+        )
     return (
-        _min_join(sym.filter(F.col("dst") > F.col("src")), mins, join_salts)
+        _min_join(sym.filter(F.col("dst") > F.col("src")), mins)
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
 
 
-def _small_star(edges: DataFrame, join_salts: int = 0) -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     """Orient each edge (max→min); connect all smaller neighbors (and the
     center) to the minimum. Same relational min+join shape as _large_star
     (min over oriented out-neighbors is ≤ center, so no least() needed on
@@ -74,7 +86,7 @@ def _small_star(edges: DataFrame, join_salts: int = 0) -> DataFrame:
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
     mins = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    nbr_edges = _min_join(oriented, mins, join_salts).select(
+    nbr_edges = _min_join(oriented, mins).select(
         F.col("dst").alias("src"), F.col("m").alias("dst")
     )
     center_edges = mins.select("src", F.col("m").alias("dst"))
@@ -85,8 +97,8 @@ def _small_star(edges: DataFrame, join_salts: int = 0) -> DataFrame:
     )
 
 
-def _driver_cc(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Union-find on the driver (path-halving); canon = component min."""
+def _union_find(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Path-halving union-find; maps every node to its component min."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -101,7 +113,34 @@ def _driver_cc(pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return sorted((x, find(x)) for x in parent)
+    return {x: find(x) for x in parent}
+
+
+def _driver_cc(pairs: Iterable[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Union-find on the driver; canon = component min."""
+    return sorted(_union_find(pairs).items())
+
+
+def _contract_partition(batches: Iterator) -> Iterator:
+    """mapInArrow body of the contraction step: union-find over one
+    partition's (src, dst) edges, then (v, local_root) for every non-root
+    v. Never more rows than the partition's distinct edges (a spanning
+    forest), and the same node sets connected."""
+    import pyarrow as pa
+
+    roots = _union_find(
+        pair
+        for b in batches
+        for pair in zip(b.column(0).to_pylist(), b.column(1).to_pylist())
+    )
+    leaves = [(v, r) for v, r in roots.items() if v != r]
+    for i in range(0, len(leaves), _CONTRACT_BATCH_ROWS):
+        chunk = leaves[i : i + _CONTRACT_BATCH_ROWS]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([v for v, _ in chunk], pa.string()),
+             pa.array([r for _, r in chunk], pa.string())],
+            names=["src", "dst"],
+        )
 
 
 def connected_components(
@@ -110,37 +149,41 @@ def connected_components(
     driver_threshold: int = 200_000,
     reliable_checkpoint_dir: str | None = None,
     stats: dict | None = None,
-    join_salts: int = 0,
 ) -> DataFrame:
     """edges(src, dst) strings → canon_map(entity_id, canon_id).
 
     canon_id = min node id of the component (deterministic). Singleton nodes
     (no edges) are the caller's concern — rewrite_canonical coalesces.
 
-    Hybrid strategy (the CC analogue of a broadcast-join threshold): the
-    same-as graph is usually orders of magnitude smaller than the corpus, so
-    below `driver_threshold` edges one collect + union-find beats an O(log n)
-    round-trip loop of shuffles (driver_threshold is a DRIVER-MEMORY bound:
-    ~100 bytes/edge ⇒ the default keeps the collect ≲ 20 MB; size it to the
-    driver, not the cluster); above it, the distributed alternating
-    large-/small-star loop (Kiveris et al.) runs with per-round checkpoints
-    to truncate lineage. Both paths produce identical maps (property-tested
-    in tests/test_graph.py).
+    Step 1, contraction: one mapInArrow pass runs union-find over each
+    partition's edges (no distinct, no shuffle) and emits (v, local_root)
+    for every non-root v — the contracted edges, checkpointed.
 
-    reliable_checkpoint_dir: per-round truncation uses localCheckpoint()
+    Step 2, the path (the CC analogue of a broadcast-join threshold): the
+    same-as graph is usually orders of magnitude smaller than the corpus,
+    so at or below `driver_threshold` CONTRACTED rows one collect +
+    union-find beats any round-trip of shuffles (driver_threshold is a
+    DRIVER-MEMORY bound: ~100 bytes/row ⇒ the default keeps the collect
+    ≲ 20 MB; size it to the driver, not the cluster). Above it, one
+    groupBy over the contracted edges' leaf and root roles is both the
+    convergence check and the canon map: if no node is a leaf with two
+    different roots and no leaf is a root, the contracted edges are a star
+    forest, every root is its component's min, and the map is returned
+    with rounds=0. Otherwise the distributed alternating large-/small-star
+    loop (Kiveris et al.) runs on the contracted edges, its first round
+    reusing the aggregate as its min table, with per-round checkpoints to
+    truncate lineage. All paths produce identical maps
+    (property-tested in tests/test_graph.py).
+
+    reliable_checkpoint_dir: lineage truncation uses localCheckpoint()
     (executor-local, fastest) by default — fine at local[N], but a long CC
     run on a real cluster loses rounds on executor death. Pass a
     durable-storage dir to switch to reliable checkpoint() (survives
-    executor loss at the cost of one write per round).
+    executor loss at the cost of one write per checkpoint).
 
     stats: optional dict the call fills with {'path': 'driver'|'distributed',
-    'rounds': k} — observability for bench/ops, no behavior change.
-
-    join_salts: 0 (default) = plain shuffle-hash star joins; N = route the
-    star steps' edge⋈min joins through skew.salted_join with N salts, for
-    hub partitions hot enough to bound the round wall yet below AQE's
-    skew-split byte thresholds (measured comparison in BENCH/CC.md;
-    results are identical either way — salt-equality property-tested)."""
+    'rounds': k} — observability for bench/ops, no behavior change. The
+    star-forest exit reports path='distributed', rounds=0."""
     spark = edges.sparkSession
     if reliable_checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(reliable_checkpoint_dir)
@@ -150,30 +193,50 @@ def connected_components(
     else:
         def _ckpt(df: DataFrame) -> DataFrame:
             return df.localCheckpoint()
-    cur = (
+
+    stars = _ckpt(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
+        .mapInArrow(_contract_partition, "src string, dst string")
     )
-    cur.persist()
-    try:
-        n_edges = cur.limit(driver_threshold + 1).count()
-        if n_edges <= driver_threshold:
-            if stats is not None:
-                stats.update(path="driver", rounds=0)
-            pairs = [(r["src"], r["dst"]) for r in cur.collect()]
-            out = _driver_cc(pairs)
-            if not out:
-                return spark.createDataFrame(
-                    [], "entity_id string, canon_id string"
-                )
-            return spark.createDataFrame(
-                out, "entity_id string, canon_id string"
-            )
-    finally:
-        cur.unpersist(blocking=False)
+    if stars.limit(driver_threshold + 1).count() <= driver_threshold:
+        if stats is not None:
+            stats.update(path="driver", rounds=0)
+        out = _driver_cc((r["src"], r["dst"]) for r in stars.collect())
+        return spark.createDataFrame(out, "entity_id string, canon_id string")
 
-    cur = _ckpt(cur)
+    # every contracted row is (leaf, root): lo/hi = the least/greatest root
+    # a node is a leaf of; is_root = it is some row's root
+    leaf_roles = stars.select(F.col("src").alias("v"), F.col("dst").alias("root"))
+    root_roles = stars.select(
+        F.col("dst").alias("v"), F.lit(None).cast("string").alias("root")
+    )
+    canon = _ckpt(
+        leaf_roles.unionByName(root_roles).groupBy("v").agg(
+            F.min("root").alias("lo"),
+            F.max("root").alias("hi"),
+            (F.count("*") > F.count("root")).alias("is_root"),
+        )
+    )
+    # a node's least root (itself if it is no leaf) is its least closed
+    # neighbor in the contracted edges: the canon map once they form a star
+    # forest, else the first large-star's per-node min
+    least = F.coalesce("lo", "v")
+    # a leaf of two roots, or a leaf that is also a root, means components
+    # met across partitions: not yet a star forest
+    if canon.filter(
+        (F.col("lo") != F.col("hi")) | (F.col("lo").isNotNull() & F.col("is_root"))
+    ).isEmpty():
+        if stats is not None:
+            stats.update(path="distributed", rounds=0)
+        return canon.select(
+            F.col("v").alias("entity_id"), least.alias("canon_id")
+        )
+
+    # no distinct(): stars is no star forest, so the first round always
+    # changes it, and its cross-partition duplicate rows cannot fake the
+    # signature fixpoint
+    cur = stars
 
     def _sig(df):
         # order-insensitive xor-hash (xor, not sum: ANSI would overflow)
@@ -183,10 +246,12 @@ def connected_components(
         ).first()
         return (r["n"], r["h"])
 
+    mins = canon.select(F.col("v").alias("src"), least.alias("m"))
     sig_cur = _sig(cur)
     rounds = 0
     for _ in range(max_iter):
-        nxt = _ckpt(_small_star(_large_star(cur, join_salts), join_salts))
+        nxt = _ckpt(_small_star(_large_star(cur, mins)))
+        mins = None
         sig_nxt = _sig(nxt)
         cur = nxt
         rounds += 1

@@ -137,7 +137,11 @@ def run_pipeline(
         )
         return detect(clean, model_bc, with_context=with_context)
 
-    # 4-pre. canonicalize (G1) — hybrid CC over same-as chains. The alias
+    # 4-pre. canonicalize (G1) — CC over same-as chains. sameas_edges
+    # builds each cluster's chain inside one groupBy group, so for
+    # non-overlapping clusters CC's per-partition contraction already
+    # yields a star forest: the canon map is the driver union-find (small
+    # graphs) or one leaf/root aggregate, with no star rounds. The alias
     # graph is INDEPENDENT of the page corpus, so with overlap_stages its
     # stage runs concurrently with detect: Spark schedules both threads'
     # jobs on one session, and canon_map's few small jobs fill task slots
@@ -145,7 +149,7 @@ def run_pipeline(
     aliases = read_table(spark, alias_clusters_path)
 
     def s_canon(_: DataFrame) -> DataFrame:
-        # reliable_checkpoint_dir switches CC's per-round truncation from
+        # reliable_checkpoint_dir switches CC's lineage truncation from
         # localCheckpoint to durable checkpoint() — the cluster-safe mode
         # (survives executor loss on a real 1000-executor run)
         return G.connected_components(

@@ -1,8 +1,9 @@
-"""G1 connected-components correctness (hand-rolled large/small-star)."""
+"""G1 connected-components correctness (partition contraction, star-forest
+exit, hand-rolled large/small-star loop)."""
 
 from pyspark.sql import Row
 
-from mxsparkg.graph import connected_components, sameas_edges
+from mxsparkg.graph import _driver_cc, connected_components, sameas_edges
 
 
 def _cc(spark, edges):
@@ -36,21 +37,37 @@ def test_cc_long_chain_log_rounds(spark):
     assert len(got) == n + 1
 
 
+def _edges_df(spark, edges, n_parts=4):
+    """Edges dealt round-robin over n_parts partitions: chains and cycles
+    then cross partitions, so the contracted edges are no star forest and
+    driver_threshold=0 reaches the star loop."""
+    return spark.createDataFrame(
+        [Row(src=a, dst=b) for a, b in edges]
+    ).repartition(n_parts)
+
+
+def _canon(df, **kw):
+    stats: dict = {}
+    got = {(r["entity_id"], r["canon_id"])
+           for r in connected_components(df, stats=stats, **kw).collect()}
+    return got, stats
+
+
 def test_cc_distributed_equals_driver_path(spark):
     """Hybrid strategy property: the distributed alternating-star loop
-    (forced via driver_threshold=0) and the driver union-find produce the
-    identical canon map."""
+    (forced via driver_threshold=0 on partition-crossing components) and
+    the driver union-find produce the identical canon map."""
     edges = (
         [(f"c{i}", f"c{i+1}") for i in range(20)]          # chain
         + [("hub", f"s{i}") for i in range(10)]            # star
         + [("z1", "z2"), ("z2", "z3"), ("z3", "z1")]       # cycle
     )
-    df = spark.createDataFrame([Row(src=a, dst=b) for a, b in edges])
-    driver = {(r["entity_id"], r["canon_id"])
-              for r in connected_components(df).collect()}
-    dist = {(r["entity_id"], r["canon_id"])
-            for r in connected_components(df, driver_threshold=0).collect()}
-    assert driver == dist
+    df = _edges_df(spark, edges)
+    driver, d_stats = _canon(df)
+    dist, stats = _canon(df, driver_threshold=0)
+    assert d_stats == {"path": "driver", "rounds": 0}
+    assert stats["path"] == "distributed" and stats["rounds"] >= 1
+    assert driver == dist == set(_driver_cc(edges))
 
 
 def test_cc_random_graph_paths_agree(spark):
@@ -70,13 +87,11 @@ def test_cc_random_graph_paths_agree(spark):
             edges.append((nodes[h], nodes[rng.randrange(2450, 3000)]))
     for _ in range(500):                 # random noise edges
         edges.append((nodes[rng.randrange(3000)], nodes[rng.randrange(3000)]))
-    df = spark.createDataFrame(
-        [Row(src=a, dst=b) for a, b in edges if a != b]
-    )
-    driver = {(r["entity_id"], r["canon_id"])
-              for r in connected_components(df).collect()}
-    dist = {(r["entity_id"], r["canon_id"])
-            for r in connected_components(df, driver_threshold=0).collect()}
+    df = _edges_df(spark, [(a, b) for a, b in edges if a != b])
+    driver, d_stats = _canon(df)
+    dist, stats = _canon(df, driver_threshold=0)
+    assert d_stats["path"] == "driver"
+    assert stats["path"] == "distributed" and stats["rounds"] >= 1
     assert driver == dist and len(driver) > 2000
 
 
@@ -94,48 +109,109 @@ def test_sameas_edges_chain_within_cluster(spark):
 
 
 def test_cc_reliable_checkpoint_path(spark, tmp_path):
-    """reliable_checkpoint_dir switches per-round lineage truncation from
-    localCheckpoint() to durable checkpoint(); results must be identical
-    and checkpoint files must actually land in the configured dir."""
+    """reliable_checkpoint_dir switches the star loop's per-round lineage
+    truncation from localCheckpoint() to durable checkpoint(); results
+    must be identical and checkpoint files must actually land in the
+    configured dir."""
     import os
 
     edges = (
         [(f"c{i}", f"c{i+1}") for i in range(20)]
         + [("hub", f"s{i}") for i in range(10)]
     )
-    df = spark.createDataFrame([Row(src=a, dst=b) for a, b in edges])
-    local = {(r["entity_id"], r["canon_id"])
-             for r in connected_components(df, driver_threshold=0).collect()}
+    df = _edges_df(spark, edges)
+    local, l_stats = _canon(df, driver_threshold=0)
     ckpt_dir = str(tmp_path / "cc_ckpt")
-    reliable = {
-        (r["entity_id"], r["canon_id"])
-        for r in connected_components(
-            df, driver_threshold=0, reliable_checkpoint_dir=ckpt_dir
-        ).collect()
-    }
+    reliable, stats = _canon(
+        df, driver_threshold=0, reliable_checkpoint_dir=ckpt_dir
+    )
+    assert l_stats["rounds"] >= 1 and stats == l_stats
+    assert stats["path"] == "distributed"
     assert reliable == local
     assert any(os.scandir(ckpt_dir)), "no reliable checkpoint files written"
 
 
-def test_cc_salted_joins_identical(spark):
-    """join_salts routes the star-step joins through skew.salted_join;
-    the canon map must be bit-identical to the unsalted path (salting is
-    a physical-plan choice, never a semantics choice) — including on a
-    hub-heavy graph, the shape salting exists for."""
-    import random
-
-    rng = random.Random(11)
-    edges = [("hub", f"leaf{i:05d}") for i in range(1500)]
-    edges += [
-        (f"m{rng.randrange(400)}", f"m{rng.randrange(400)}")
-        for _ in range(600)
+def _colocated_clusters(spark):
+    """300 3-id alias clusters through sameas_edges: each chain is built
+    inside one groupBy group, so no component spans partitions (the
+    pipeline shape)."""
+    rows = [
+        Row(entity_id=f"e{c:04d}_{k}", canon_id=f"e{c:04d}_0")
+        for c in range(300) for k in range(3)
     ]
-    df = spark.createDataFrame(
-        [Row(src=a, dst=b) for a, b in edges if a != b]
-    )
-    plain = {(r["entity_id"], r["canon_id"])
-             for r in connected_components(df, driver_threshold=0).collect()}
-    salted = {(r["entity_id"], r["canon_id"])
-              for r in connected_components(
-                  df, driver_threshold=0, join_salts=8).collect()}
-    assert plain == salted and len(plain) > 1500
+    return sameas_edges(spark.createDataFrame(rows))
+
+
+def test_cc_colocated_clusters_take_star_forest_exit(spark):
+    """Above driver_threshold, partition-local clusters contract to a star
+    forest: the leaf/root aggregate is the canon map, no star round runs."""
+    df = _colocated_clusters(spark)
+    edges = [(r["src"], r["dst"]) for r in df.collect()]
+    got, stats = _canon(df, driver_threshold=10)
+    assert stats == {"path": "distributed", "rounds": 0}
+    assert got == set(_driver_cc(edges)) and len(got) == 900
+
+
+def test_cc_split_chains_reach_star_loop(spark):
+    """Chains dealt round-robin over partitions contract to chains of
+    partition-local stars (a node is a leaf in one partition and a root in
+    another): no star forest, so the loop runs and still matches."""
+    edges = [(f"a{i:02d}", f"a{i+1:02d}") for i in range(30)]
+    edges += [(f"b{i:02d}", f"b{i+1:02d}") for i in range(12)]
+    got, stats = _canon(_edges_df(spark, edges), driver_threshold=0)
+    assert stats["path"] == "distributed" and stats["rounds"] >= 1
+    assert got == set(_driver_cc(edges))
+
+
+def test_cc_root_shared_across_partitions_takes_exit(spark):
+    """One root whose leaves sit in two partitions is still a star forest
+    (each leaf has one root, no leaf is a root): the exit is exact."""
+    edges = [("a", f"l{i}") for i in range(10)] + [("x", "y")]
+    # parallelize slices contiguously: a's leaves land in both partitions
+    df = spark.sparkContext.parallelize(edges, 2).toDF("src string, dst string")
+    assert df.rdd.glom().map(lambda p: any(a == "a" for a, _ in p)).collect() \
+        == [True, True]
+    got, stats = _canon(df, driver_threshold=0)
+    assert stats == {"path": "distributed", "rounds": 0}
+    assert got == set(_driver_cc(edges))
+
+
+def test_cc_leaf_of_two_roots_reaches_star_loop(spark):
+    """c is a leaf of a in one partition and of b in the other; neither
+    root is a leaf. Not a star forest (b must map to a): the loop runs."""
+    edges = [("a", "c"), ("b", "c")]
+    df = spark.sparkContext.parallelize(edges, 2).toDF("src string, dst string")
+    got, stats = _canon(df, driver_threshold=0)
+    assert stats["path"] == "distributed" and stats["rounds"] >= 1
+    assert got == {("a", "a"), ("b", "a"), ("c", "a")}
+
+
+def test_cc_empty_edges(spark):
+    for threshold in (0, 200_000):
+        out = connected_components(
+            spark.createDataFrame([], "src string, dst string"),
+            driver_threshold=threshold,
+        )
+        assert out.dtypes == [("entity_id", "string"), ("canon_id", "string")]
+        assert out.count() == 0
+
+
+def test_cc_star_forest_job_count(spark):
+    """Regression bound on Spark jobs for the pipeline's CC shape
+    (colocated clusters above driver_threshold), counted under the call's
+    own job group: contraction, threshold probe, leaf/root aggregate,
+    forest check and the result's collect take 7. The star loop took 31
+    on the pipeline's alias graph."""
+    # checkpointed first: sameas_edges' own jobs stay out of the count
+    df = _colocated_clusters(spark).localCheckpoint()
+    sc = spark.sparkContext
+    group = "test_cc_star_forest_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        stats: dict = {}
+        connected_components(df, driver_threshold=10, stats=stats).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert stats["rounds"] == 0
+    assert n_jobs <= 7, n_jobs
