@@ -18,6 +18,14 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mxsparkg.contract import contract_oracle_sql, contract_queries  # noqa: E402
+from mxsparkg.datapipe import datapipe_oracle_sql, datapipe_queries  # noqa: E402
+from mxsparkg.geo import geo_oracle_sql, geo_queries  # noqa: E402
+from mxsparkg.graphquery import (  # noqa: E402
+    graphquery_oracle_sql,
+    graphquery_queries,
+)
+from mxsparkg.kgembed import kgembed_oracle_sql, kgembed_queries  # noqa: E402
+from mxsparkg.kgexport import kgexport_oracle_sql, kgexport_queries  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -43,70 +51,20 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable] = {}
     out.update(contract_queries())
-    try:
-        from mxsparkg.datapipe import datapipe_queries
-
-        out.update(datapipe_queries())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.graphquery import graphquery_queries
-
-        out.update(graphquery_queries())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.kgexport import kgexport_queries
-
-        out.update(kgexport_queries())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.kgembed import kgembed_queries
-
-        out.update(kgembed_queries())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.geo import geo_queries
-
-        out.update(geo_queries())
-    except ImportError:
-        pass
+    out.update(datapipe_queries())
+    out.update(graphquery_queries())
+    out.update(kgexport_queries())
+    out.update(kgembed_queries())
+    out.update(geo_queries())
     return out
 
 
 def oracle_sql() -> dict[str, str]:
     out: dict[str, str] = {}
     out.update(contract_oracle_sql())
-    try:
-        from mxsparkg.datapipe import datapipe_oracle_sql
-
-        out.update(datapipe_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.graphquery import graphquery_oracle_sql
-
-        out.update(graphquery_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.kgexport import kgexport_oracle_sql
-
-        out.update(kgexport_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.kgembed import kgembed_oracle_sql
-
-        out.update(kgembed_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from mxsparkg.geo import geo_oracle_sql
-
-        out.update(geo_oracle_sql())
-    except ImportError:
-        pass
+    out.update(datapipe_oracle_sql())
+    out.update(graphquery_oracle_sql())
+    out.update(kgexport_oracle_sql())
+    out.update(kgembed_oracle_sql())
+    out.update(geo_oracle_sql())
     return out

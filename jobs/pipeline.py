@@ -63,9 +63,6 @@ def main() -> None:
     ap.add_argument("--light-summary", action="store_true",
                     help="row counts from stage manifests (no extra count "
                          "jobs); skips the distinct-triples scan")
-    ap.add_argument("--salted", action="store_true",
-                    help="salted (host, salt) repartition before detect "
-                         "(for host-clustered input layouts)")
     ap.add_argument("--fold-triples", action="store_true",
                     help="don't materialize the canonical-triples table: "
                          "the edges rollup consumes the detect checkpoint "
@@ -110,7 +107,6 @@ def main() -> None:
         rules=rules,
         pred_patterns=pred_patterns,
         with_metrics=not args.no_metrics,
-        salted_repartition=args.salted,
         langs=args.langs.split(",") if args.langs else None,
         incremental=args.incremental,
         reliable_checkpoint_dir=args.reliable_checkpoint,

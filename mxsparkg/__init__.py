@@ -12,13 +12,11 @@ Layout (SURVEY.md §7.0):
   session    — SparkSession factory tuned for the pipeline
   catalog    — table IO abstraction (iceberg when jar present | parquet fallback)
   extract    — U1 byte-identical HTML→text (pandas UDF, scalar-iterator)
-  tokenize   — U2 tokenize+generalize (pandas UDF)
   detect     — U3 trie mention detection + predicate pairing (mapInArrow)
   link       — J1/U4/W1 dictionary+context entity linking, NIL handling
   graph      — G1 connected components (large/small-star), G2 rewrite, rollups
   mining     — M1 PrefixSpan rule mining + confidence scoring, M2 trie build
   metrics    — U8/S6 per-partition lineage + metrics rows
-  skew       — J8 salting helpers
   pipeline   — lifecycle C: staged DAG with checkpoint/resume manifests
   contract   — driver-contract relational operators (SURVEY.md §2 keys)
   datapipe   — training-data ops: dedup, similarity search, text analysis,

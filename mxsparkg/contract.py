@@ -869,7 +869,17 @@ def fn_case(spark, sf):
 
 # ------------------------------------------------------- skew (J8) ---------
 
-from mxsparkg.skew import salted_join  # noqa: E402
+def salted_join(big: DataFrame, small: DataFrame, on: str, n_salts: int = 16,
+                how: str = "inner") -> DataFrame:
+    """Equi-join robust to hot keys in `big`: salt the big side, replicate
+    `small` ×n_salts (the classic user-level skew join)."""
+    big_s = big.withColumn(
+        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))
+    )
+    small_s = small.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<bigint>"))
+    )
+    return big_s.join(small_s, on=[on, "_salt"], how=how).drop("_salt")
 
 
 @reg("join_salted",

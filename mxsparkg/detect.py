@@ -1,10 +1,10 @@
 """U3 — trie mention detection + predicate pairing (SURVEY.md §2.9 U3).
 
-One fused mapInArrow pass over pages_clean(text): tokenize → generalize →
-trie match → conflict-resolve → predicate pairing, emitting a unified
-detections table (kind ∈ {mention, triple}). Fusing avoids materializing fat
-token arrays through a shuffle — at 100 TB the tokens table would be ~3× the
-corpus; here it never exists outside worker memory.
+One fused mapInArrow pass over pages(url, html): extract → tokenize →
+generalize → trie match → conflict-resolve → predicate pairing, emitting a
+unified detections table (kind ∈ {mention, triple}). Fusing avoids
+materializing fat token arrays through a shuffle — at 100 TB the tokens
+table would be ~3× the corpus; here it never exists outside worker memory.
 
 The rule trie + lexicons arrive via SparkContext.broadcast (the Spark
 analogue of mXS's in-memory model) and are built once per Python worker:
@@ -74,7 +74,7 @@ def detect_pages(pages: DataFrame, model_bc: Broadcast,
     """pages(url, html) → detections, with extraction fused INTO the same
     Python pass (U1∘U3 in one mapInArrow stage).
 
-    Versus extract_pages → detect as two stages, this removes a whole
+    Versus extract_pages feeding a second Python pass, this removes a whole
     JVM↔Python Arrow round-trip and the JVM-side UnsafeRow↔Arrow rebuild
     between the two Python nodes — the extracted text NEVER crosses a
     process boundary. Same pinned_extract, so byte-identity is unchanged."""
@@ -91,22 +91,6 @@ def detect_pages(pages: DataFrame, model_bc: Broadcast,
             yield _tag_batch(urls, texts, trie, lex, preds, with_context)
 
     return pages.select("url", "html").mapInArrow(run, DETECT_SCHEMA)
-
-
-def detect(pages_clean: DataFrame, model_bc: Broadcast,
-           with_context: bool = True) -> DataFrame:
-    """pages_clean(url, text) → detections (kind=mention|triple)."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        trie, lex, preds = _model_for(model_bc)
-        for batch in batches:
-            yield _tag_batch(
-                batch.column("url").to_pylist(),
-                batch.column("text").to_pylist(),
-                trie, lex, preds, with_context,
-            )
-
-    return pages_clean.select("url", "text").mapInArrow(run, DETECT_SCHEMA)
 
 
 def _tag_batch(urls, texts, trie, lex, preds,

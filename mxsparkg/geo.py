@@ -10,7 +10,7 @@ the 3x3 neighborhood of each point's cell (sound whenever the distance
 radius <= cell size), and let the equi-join on cell id shuffle-partition
 the work. Sigma(|cell| * |3x3 probe|) is bounded by cell occupancy, never
 by n^2; a skewed mega-cell (one city holding half the points) would ride
-the same salted-join machinery as `join_salted` (mxsparkg/skew.py).
+the same salted-join machinery as `join_salted` (mxsparkg/contract.py).
 
 Cross-engine determinism: points are derived from the driver's events
 table via the repo's md5 idiom (identical text in Spark and DuckDB), all

@@ -36,6 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _CONTRACT_BATCH_ROWS = 65_536
+# provenance caps of the rollups: the lexicographically-first distinct
+# urls per edge and surface forms per node
+MAX_URLS = 1000
+MAX_SURFACES = 1000
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -173,7 +177,9 @@ def connected_components(
     loop (Kiveris et al.) runs on the contracted edges, its first round
     reusing the aggregate as its min table, with per-round checkpoints to
     truncate lineage. All paths produce identical maps
-    (property-tested in tests/test_graph.py).
+    (property-tested in tests/test_graph.py). A loop that reaches max_iter
+    rounds without its fixpoint raises RuntimeError rather than return a
+    partial map.
 
     reliable_checkpoint_dir: lineage truncation uses localCheckpoint()
     (executor-local, fastest) by default — fine at local[N], but a long CC
@@ -258,6 +264,13 @@ def connected_components(
         if sig_cur == sig_nxt:
             break
         sig_cur = sig_nxt
+    else:
+        # the unconverged edges would still read as a plausible canon map
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} star "
+            "rounds (the loop needs O(log n) — raise max_iter only if the "
+            "graph's diameter genuinely calls for it)"
+        )
     if stats is not None:
         stats.update(path="distributed", rounds=rounds)
     # after convergence every edge is (node, root) with root = component min
@@ -290,67 +303,42 @@ def rewrite_canonical(triples: DataFrame, canon_map: DataFrame) -> DataFrame:
     )
 
 
-def materialize_edges(
-    canon_triples: DataFrame, n_salts: int = 8, max_urls: int = 1000
-) -> DataFrame:
+def materialize_edges(canon_triples: DataFrame) -> DataFrame:
     """A3: edge rollup with support counts + provenance urls.
 
-    Skew-safe two-phase aggregation (J8 analogue for aggs): a celebrity
-    edge at web scale has 10^6+ supporting urls — one reducer building that
-    collect_set is the skew bottleneck. Phase 1 groups by (key, salt) so the
-    hot key spreads over n_salts reducers; phase 2 merges the partial sets.
-    Provenance is capped at the lexicographically-first `max_urls`
-    (deterministic), with the true support in n_support."""
-    salted = canon_triples.withColumn(
-        "_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts))
-    )
-    partial = salted.groupBy("subj", "pred", "obj", "_salt").agg(
-        F.count("*").alias("_n"),
-        F.slice(F.array_sort(F.collect_set("url")), 1, max_urls).alias("_urls"),
-    )
-    return partial.groupBy("subj", "pred", "obj").agg(
-        F.sum("_n").alias("n_support"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_urls")))),
-            1,
-            max_urls,
-        ).alias("urls"),
+    One groupBy: count and collect_set both combine map-side, so a
+    celebrity edge's 10^6+ supporting rows reach its reducer as one
+    partial count and url set per map task; hot reducer partitions are
+    left to AQE. Provenance is capped at the lexicographically-first
+    MAX_URLS distinct urls (deterministic), with the true support in
+    n_support. A url-salted first level measured no better (BENCH/TAIL.md)."""
+    return canon_triples.groupBy("subj", "pred", "obj").agg(
+        F.count("*").alias("n_support"),
+        F.slice(F.array_sort(F.collect_set("url")), 1, MAX_URLS).alias("urls"),
     )
 
 
 def materialize_nodes(
-    linked_mentions: DataFrame,
-    canon_map: DataFrame,
-    n_salts: int = 8,
-    max_surfaces: int = 1000,
+    linked_mentions: DataFrame, canon_map: DataFrame
 ) -> DataFrame:
     """A4: node rollup — mention count, surface forms, majority type.
 
-    Same two-phase salted aggregation as materialize_edges: a celebrity
-    entity's mentions would otherwise funnel into one reducer. Majority
-    type folds through (canon_id, etype) counts, so it is exact (not a
-    mode over a sample) and never builds a per-entity row set."""
-    cm = canon_map.select(
-        F.col("entity_id"), F.col("canon_id")
-    )
+    Two groupBys, (canon_id, etype) then canon_id: the majority type needs
+    the per-type counts, so it is exact (not a mode over a sample) and
+    never builds a per-entity row set. A mention with no canon-map row
+    keeps its own entity_id. Surface forms are capped at the
+    lexicographically-first MAX_SURFACES; a count tie between etypes goes
+    to the greater etype."""
+    cm = canon_map.select("entity_id", "canon_id")
     withc = linked_mentions.join(F.broadcast(cm), on="entity_id", how="left").select(
         F.coalesce("canon_id", F.col("entity_id")).alias("canon_id"),
         "surface_norm",
         "etype",
-        F.pmod(F.xxhash64("url", "m_start"), F.lit(n_salts)).alias("_salt"),
     )
-    partial = withc.groupBy("canon_id", "etype", "_salt").agg(
+    by_type = withc.groupBy("canon_id", "etype").agg(
         F.count("*").alias("_n"),
         F.slice(
-            F.array_sort(F.collect_set("surface_norm")), 1, max_surfaces
-        ).alias("_surf"),
-    )
-    by_type = partial.groupBy("canon_id", "etype").agg(
-        F.sum("_n").alias("_n"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_surf")))),
-            1,
-            max_surfaces,
+            F.array_sort(F.collect_set("surface_norm")), 1, MAX_SURFACES
         ).alias("_surf"),
     )
     return by_type.groupBy("canon_id").agg(
@@ -358,7 +346,7 @@ def materialize_nodes(
         F.slice(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("_surf")))),
             1,
-            max_surfaces,
+            MAX_SURFACES,
         ).alias("surface_forms"),
         F.max_by("etype", F.struct(F.col("_n"), F.col("etype"))).alias("etype"),
     )

@@ -15,15 +15,15 @@ Scale design decisions (100 TB posture):
 - extract+detect are FUSED into one narrow stage: the fat html/text columns
   never cross a shuffle, and the checkpoint lands on `detections` (~100×
   smaller than extracted text). Work distribution comes from input splits
-  (files/row-groups), which bounds partition size regardless of host skew;
-  `salted_repartition=True` re-enables an explicit (host, salt) shuffle
-  before detect for host-clustered file layouts (J8).
+  (files/row-groups), which bounds partition size regardless of host skew.
 - checkpoint_stages controls the resume granularity: by default the
   expensive stage (detect) and the terminal tables are materialized; cheap
   broadcast joins between them are recomputed on resume rather than paying
   a write+read round-trip each run.
-- explicit skew handling lives where shuffles actually are: the salted
-  two-phase rollups in graph.materialize_edges/nodes and the hybrid CC.
+- hot keys in the shuffles (celebrity edges and nodes in the rollups, hub
+  nodes in CC) are left to the engine: map-side partial aggregation plus
+  AQE's skew-join split. User-level salting measured no better
+  (BENCH/CC.md, BENCH/TAIL.md).
 """
 
 from __future__ import annotations
@@ -38,15 +38,9 @@ from pyspark.sql import functions as F
 from mxsparkg import graph as G
 from mxsparkg import link as L
 from mxsparkg.catalog import Checkpointer, read_table
-from mxsparkg.detect import (
-    broadcast_model,
-    detect,
-    detect_pages,
-    split_detections,
-)
+from mxsparkg.detect import broadcast_model, detect_pages, split_detections
 from mxsparkg.extract import extract_pages
 from mxsparkg.metrics import append_metrics
-from mxsparkg.skew import repartition_salted
 
 DEFAULT_CHECKPOINT_STAGES = ("detect", "canon_map", "triples", "edges", "nodes")
 
@@ -59,9 +53,7 @@ def run_pipeline(
     checkpoint_root: str,
     rules: list[dict] | None = None,
     pred_patterns: list[dict] | None = None,
-    n_partitions: int | None = None,
     with_metrics: bool = True,
-    salted_repartition: bool = False,
     checkpoint_stages: tuple[str, ...] = DEFAULT_CHECKPOINT_STAGES,
     langs: list[str] | None = None,
     incremental: bool = False,
@@ -78,7 +70,6 @@ def run_pipeline(
         )
     ck = Checkpointer(spark, checkpoint_root)
     model_bc = broadcast_model(spark, rules, pred_patterns)
-    npart = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     ckset = set(checkpoint_stages)
     timings: dict[str, float] = {}
     metrics_lock = threading.Lock()
@@ -124,18 +115,11 @@ def run_pipeline(
     edict = read_table(spark, entity_dict_path)
     with_context = (L.dict_stats(edict)["max_cw"] or 0) > 0
 
-    # 1+2. extract (U1) + detect (U3) fused — no shuffle touches html/text.
-    # Default: ONE mapInArrow stage (html→text→tag in the same Python
-    # worker; text never crosses a process boundary). The salted variant
-    # shuffles extracted text by (host, salt) first — for host-clustered
-    # input layouts — at the cost of a second Python stage.
+    # 1+2. extract (U1) + detect (U3) fused — no shuffle touches html/text:
+    # ONE mapInArrow stage (html→text→tag in the same Python worker; text
+    # never crosses a process boundary).
     def s_detect(p: DataFrame) -> DataFrame:
-        if not salted_repartition:
-            return detect_pages(p, model_bc, with_context=with_context)
-        clean = repartition_salted(
-            extract_pages(p), "host", npart, salt_on=["url"]
-        )
-        return detect(clean, model_bc, with_context=with_context)
+        return detect_pages(p, model_bc, with_context=with_context)
 
     # 4-pre. canonicalize (G1) — CC over same-as chains. sameas_edges
     # builds each cluster's chain inside one groupBy group, so for
@@ -192,7 +176,7 @@ def run_pipeline(
             "canon_map", s_canon, aliases
         )
 
-        # 5. rewrite + materialize graph (skew-safe two-phase rollups).
+        # 5. rewrite + materialize graph.
         # nodes depends only on (linked, canon_map) — independent of the
         # triples→edges chain, so the two branches overlap: the wall pays
         # max(triples+edges, nodes) instead of their sum, and each branch's

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the KG pipeline.
 
 Scale posture (100 TB / 1000-executor design, tested on local[N]):
-- AQE on: runtime coalescing, skew-join splitting as backstop to explicit
-  salting (skew.py)
+- AQE on: runtime coalescing and skew-join splitting — hot keys are left
+  to the engine, not salted in user code
 - Arrow batches capped small-ish: page rows are fat (html binary), so a
   batch of 512 keeps Python-worker memory bounded
 - shuffle partitions default 2-3× cores locally; on a real cluster this is

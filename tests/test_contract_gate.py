@@ -88,3 +88,15 @@ def test_approx_percentile_error_bound(spark):
                 f"{flag} {col}: est {est} occupies ranks [{lo},{hi}] "
                 f"vs target {target} (n={n}, tol={tol})"
             )
+
+
+def test_broken_gate_module_fails_import(monkeypatch):
+    """A gate module that cannot import fails the entry module itself
+    instead of silently dropping its keys from queries()."""
+    import importlib
+    import sys
+
+    monkeypatch.setitem(sys.modules, "mxsparkg.datapipe", None)
+    monkeypatch.delitem(sys.modules, "__spark_entry__")
+    with pytest.raises(ImportError):
+        importlib.import_module("__spark_entry__")

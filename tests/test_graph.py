@@ -215,3 +215,93 @@ def test_cc_star_forest_job_count(spark):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert stats["rounds"] == 0
     assert n_jobs <= 7, n_jobs
+
+
+def test_cc_raises_when_rounds_run_out(spark):
+    """A star loop that stops before its fixpoint must fail loudly: the
+    partial edges would read as a plausible but wrong canon map."""
+    import pytest
+
+    edges = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(64)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(
+            _edges_df(spark, edges), driver_threshold=0, max_iter=1
+        ).collect()
+
+
+def test_rollups_match_python_oracle(spark):
+    """materialize_edges / materialize_nodes against a pure-Python oracle:
+    n_support and n_mentions count every row, urls and surface_forms are
+    the sorted first 1000 distinct values, the majority etype breaks a
+    count tie toward the greater etype, and a mention with no canon-map
+    row keeps its own entity_id."""
+    from collections import Counter, defaultdict
+
+    from mxsparkg.graph import materialize_edges, materialize_nodes
+
+    # --- edges: one hot edge with 1500 distinct urls, 300 repeated ---
+    hot = [f"u{i:04d}" for i in range(1500)]
+    triples = [("s1", "p", "o1", u) for u in hot + hot[::5]]
+    triples += [("s2", "p", "o2", "u9"), ("s2", "p", "o2", "u9"),
+                ("s2", "p", "o2", "u1")]
+    tdf = spark.createDataFrame(
+        triples, "subj string, pred string, obj string, url string"
+    )
+    urls = defaultdict(set)
+    n_support: Counter = Counter()
+    for s, p, o, u in triples:
+        urls[(s, p, o)].add(u)
+        n_support[(s, p, o)] += 1
+    want_edges = {
+        k: (n_support[k], sorted(v)[:1000]) for k, v in urls.items()
+    }
+    got_edges = {
+        (r["subj"], r["pred"], r["obj"]): (r["n_support"], list(r["urls"]))
+        for r in materialize_edges(tdf).collect()
+    }
+    assert got_edges == want_edges
+    assert got_edges[("s1", "p", "o1")][0] == 1800
+
+    # --- nodes ---
+    mentions = []
+    # c1 (via e1, e2): org and pers tie at 3 mentions each → pers wins
+    for i, (eid, ety) in enumerate(
+        [("e1", "org")] * 3 + [("e2", "pers")] * 3
+    ):
+        mentions.append((eid, f"acme {i % 2}", ety, f"w{i}", i))
+    # big: 1200 distinct surfaces over two etypes → surface cap
+    for i in range(1200):
+        mentions.append(("big", f"s{i:04d}", "org" if i % 3 else "loc",
+                         f"b{i}", 0))
+    # lonely: no canon-map row → keeps its own entity_id
+    mentions.append(("lonely", "lone", "misc", "x", 0))
+    mdf = spark.createDataFrame(
+        mentions,
+        "entity_id string, surface_norm string, etype string, url string, "
+        "m_start int",
+    )
+    canon = {"e1": "c1", "e2": "c1", "big": "big"}
+    cdf = spark.createDataFrame(
+        list(canon.items()), "entity_id string, canon_id string"
+    )
+    n_ment: Counter = Counter()
+    by_type: dict = defaultdict(Counter)
+    surf = defaultdict(set)
+    for eid, s, ety, _u, _m in mentions:
+        c = canon.get(eid, eid)
+        n_ment[c] += 1
+        by_type[c][ety] += 1
+        surf[c].add(s)
+    want_nodes = {
+        c: (n_ment[c], sorted(surf[c])[:1000],
+            max(by_type[c].items(), key=lambda kv: (kv[1], kv[0]))[0])
+        for c in n_ment
+    }
+    got_nodes = {
+        r["canon_id"]: (r["n_mentions"], list(r["surface_forms"]), r["etype"])
+        for r in materialize_nodes(mdf, cdf).collect()
+    }
+    assert got_nodes == want_nodes
+    assert got_nodes["c1"][2] == "pers"
+    assert len(got_nodes["big"][1]) == 1000
+    assert got_nodes["lonely"] == (1, ["lone"], "misc")

@@ -106,24 +106,23 @@ def test_annotated_sequence_has_marker_items():
     assert "<pers>" in flat and "</pers>" in flat and "TOPONYM" in flat
 
 
-def test_tokenize_pages_offsets_byte_exact(spark, tiny_fixtures):
-    """U2 tokens table: every token's (start, end) indexes text exactly
-    (the offset contract that makes mention spans byte-accurate)."""
-    from mxsparkg.extract import extract_pages
-    from mxsparkg.tokenize import tokenize_pages
-
-    pages = spark.read.parquet(f"{tiny_fixtures}/pages.parquet").limit(20)
-    clean = extract_pages(pages)
-    texts = {r["url"]: r["text"] for r in clean.collect()}
-    rows = tokenize_pages(clean).collect()
-    assert rows
+def test_tokenize_pages_offsets_byte_exact(tiny_fixtures):
+    """Per-line tokenize + split_sentences over extracted pages: every
+    token's page-level (start, end) indexes the text exactly (the offset
+    contract that makes mention spans byte-accurate)."""
+    lex = build_lexicons()
+    rows = pq.read_table(f"{tiny_fixtures}/pages.parquet").to_pylist()[:20]
     n_checked = 0
     for r in rows:
-        text = texts[r["url"]]
-        for t in r["toks"]:
-            assert text[t["start"]:t["end"]] == t["tok"]
-            assert t["gen"][0] == t["tok"].lower()
-            n_checked += 1
+        text = tc.pinned_extract(r["html"])
+        pos = 0
+        for line in text.split("\n"):
+            for sent in tc.split_sentences(tc.tokenize(line)):
+                for tok, s, e in sent:
+                    assert text[pos + s:pos + e] == tok
+                    assert tc.generalize(tok, lex)[0] == tok.lower()
+                    n_checked += 1
+            pos += len(line) + 1
     assert n_checked > 100
 
 
