@@ -6,7 +6,9 @@ Usage:
       --aliases <alias clusters table> --checkpoint <dir> [--out <dir>]
 
 Resumable: re-running with the same --checkpoint skips completed stages
-(north_rule). Prints a one-line JSON summary on success.
+(north_rule). Prints a one-line JSON summary on success; its row counts
+and per-stage walls (`stage_walls`, seconds) are read from the stage
+manifests, so after a resume they are those of the committing run.
 """
 
 from __future__ import annotations
@@ -21,8 +23,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from mxsparkg.catalog import write_table  # noqa: E402
-from mxsparkg.pipeline import run_pipeline, triples_for_eval  # noqa: E402
+from mxsparkg.catalog import Checkpointer, write_table  # noqa: E402
+from mxsparkg.pipeline import (  # noqa: E402
+    DEFAULT_CHECKPOINT_STAGES,
+    run_pipeline,
+    triples_for_eval,
+)
 
 
 def main() -> None:
@@ -61,8 +67,8 @@ def main() -> None:
                     help="comma-separated language allowlist (P2 filter, "
                          "pushed into the scan)")
     ap.add_argument("--light-summary", action="store_true",
-                    help="row counts from stage manifests (no extra count "
-                         "jobs); skips the distinct-triples scan")
+                    help="skip the distinct-triples scan (triples_distinct "
+                         "reports -1)")
     ap.add_argument("--fold-triples", action="store_true",
                     help="don't materialize the canonical-triples table: "
                          "the edges rollup consumes the detect checkpoint "
@@ -78,8 +84,6 @@ def main() -> None:
                          "per-round checkpoints (cluster-safe mode: survives "
                          "executor loss; default localCheckpoint)")
     args = ap.parse_args()
-
-    from mxsparkg.pipeline import DEFAULT_CHECKPOINT_STAGES
 
     ck_stages = DEFAULT_CHECKPOINT_STAGES
     if args.fold_triples:
@@ -113,36 +117,30 @@ def main() -> None:
         checkpoint_stages=ck_stages,
         pages_format=args.pages_format,
     )
-    if args.light_summary:
-        import json as _json
+    # one record per committed stage: counts and walls come from the
+    # manifests (the row counts rode on each stage's write job), so the
+    # summary launches no count jobs. On a resumed run the walls are those
+    # of the run that committed each stage.
+    ck = Checkpointer(spark, args.checkpoint)
+    manifests = {s: ck.manifest(s) for s in ck_stages}
+    if args.fold_triples:
+        # no triples checkpoint — but the edges rollup counts every
+        # canonical triple exactly once in n_support, so its sum IS
+        # the triples row count (tiny pyarrow read, no Spark job)
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pds
 
-        def _rows(stage: str) -> int:
-            with open(os.path.join(
-                    args.checkpoint, f"{stage}._manifest.json")) as f:
-                return _json.load(f)["rows"]
-
-        if args.fold_triples:
-            # no triples checkpoint — but the edges rollup counts every
-            # canonical triple exactly once in n_support, so its sum IS
-            # the triples row count (tiny pyarrow read, no Spark job)
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pds
-
-            n_total = pc.sum(
-                pds.dataset(
-                    os.path.join(args.checkpoint, "edges"), format="parquet"
-                ).to_table(columns=["n_support"]).column("n_support")
-            ).as_py()
-        else:
-            n_total = _rows("triples")
-        n_triples = -1  # distinct scan skipped in light mode
-        n_nodes = _rows("nodes")
-        n_edges = _rows("edges")
+        n_total = pc.sum(
+            pds.dataset(
+                os.path.join(args.checkpoint, "edges"), format="parquet"
+            ).to_table(columns=["n_support"]).column("n_support")
+        ).as_py()
     else:
-        n_triples = triples_for_eval(res["triples"]).count()
-        n_total = res["triples"].count()
-        n_nodes = res["nodes"].count()
-        n_edges = res["edges"].count()
+        n_total = manifests["triples"]["rows"]
+    n_triples = (
+        -1 if args.light_summary  # distinct scan skipped in light mode
+        else triples_for_eval(res["triples"]).count()
+    )
     if args.export_ntriples:
         from mxsparkg.kgexport import export_edges_ntriples
 
@@ -172,11 +170,13 @@ def main() -> None:
         **eval_block,
         "triples_distinct": n_triples,
         "triples_total": n_total,
-        "nodes": n_nodes,
-        "edges": n_edges,
+        "nodes": manifests["nodes"]["rows"],
+        "edges": manifests["edges"]["rows"],
         "wall_sec": round(wall, 2),
         "triples_per_sec": round(n_total / wall, 1),
-        "stage_walls": res.get("_stage_walls", {}),
+        "stage_walls": {
+            s: round(m["wall_ms"] / 1000.0, 2) for s, m in manifests.items()
+        },
     }))
     spark.stop()
 

@@ -3,14 +3,15 @@
 The production target is Iceberg (north_rule); this sandbox ships no Iceberg
 runtime jar (SURVEY.md §0 [ENV]), so the layer is format-abstract:
 `format="iceberg"` uses DataFrameWriterV2 `writeTo` when the jar is on the
-cluster classpath; the parquet fallback writes a directory + `_manifest.json`
-and is what all tests/bench use. Pipeline code only calls these functions,
-never a hardcoded format.
+cluster classpath; the parquet fallback writes a directory and is what all
+tests/bench use. `read_table`/`write_table` carry the format for the
+pipeline's input and output tables; pipeline code never hardcodes one.
 
 Checkpoint contract (north_rule: resumable stages): a stage is complete iff
-its manifest exists; `materialize` writes data to a temp dir, then the
-manifest — the manifest write is the atomic commit point, so a killed job
-re-runs an incomplete stage from its inputs (idempotent overwrite).
+its manifest exists; `Checkpointer.run_stage` overwrites the stage's
+parquet directory, then writes the manifest — the manifest write is the
+atomic commit point, so a killed job re-runs an incomplete stage from its
+inputs (idempotent overwrite). Checkpoints are always parquet.
 """
 
 from __future__ import annotations
@@ -50,36 +51,6 @@ def write_table(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a BUCKETED managed table — the co-located-join layout for
-    keys two big tables join on repeatedly (nodes⋈edges, triples⋈triples
-    on subj): both sides hash-partitioned into the same n_buckets files
-    AT WRITE TIME, so every later equi-join on the bucket key plans with
-    ZERO Exchange on either side (plan-asserted in tests/test_plans.py)
-    — the shuffle is paid once at ingest instead of per query, the
-    single biggest repeated-join saving at 100 TB. sort_cols additionally
-    pre-sorts within buckets, turning the join's per-partition sort into
-    a no-op.
-
-    Bucketing requires the session catalog (`saveAsTable` — bucket
-    metadata lives in the table, not the files), which is why this is a
-    TABLE api while everything else here is path-based; on the Iceberg
-    production target the same layout is `bucket(n, col)` partition
-    transforms. n_buckets sizes like shuffle partitions: ~2x the
-    cluster's cores, bounded by per-bucket file size."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
 
 
 def compact_table(
@@ -135,12 +106,13 @@ def compact_table(
 
 
 class Checkpointer:
-    """Stage-boundary persistence with resume detection."""
+    """Stage-boundary persistence with resume detection. Parquet only:
+    `append` writes raw parquet files into the stage directory, which
+    would corrupt a table format that tracks its own files."""
 
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, stage: str) -> str:
@@ -149,52 +121,53 @@ class Checkpointer:
     def _manifest(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}._manifest.json")
 
+    def _commit(self, stage: str, manifest: dict) -> None:
+        tmp = self._manifest(stage) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest(stage))
+
     def is_done(self, stage: str) -> bool:
         return os.path.exists(self._manifest(stage))
 
-    def read(self, stage: str) -> DataFrame:
-        return read_table(self.spark, self._dir(stage), self.fmt)
+    def manifest(self, stage: str) -> dict:
+        """The committed stage's record: rows, schema, wall_ms (and
+        `appends` after a delta append)."""
+        with open(self._manifest(stage)) as f:
+            return json.load(f)
 
-    def materialize(self, df: DataFrame, stage: str, wall_ms: float | None = None) -> DataFrame:
-        """Write stage output, then atomically commit via manifest; returns
-        the re-read DataFrame (truncates lineage — the Spark-batch analogue
-        of a streaming checkpoint). Row count rides on the write job via the
-        Observation API — no separate count scan per stage."""
+    def read(self, stage: str) -> DataFrame:
+        return read_table(self.spark, self._dir(stage))
+
+    def run_stage(self, stage: str, fn, *inputs: DataFrame) -> DataFrame:
+        """Resume-aware stage execution: read back when already done,
+        otherwise build the plan, write it, and commit the manifest.
+        Returns the re-read DataFrame (truncates lineage — the Spark-batch
+        analogue of a streaming checkpoint). The manifest's wall_ms covers
+        the plan build and the write; the row count rides on the write job
+        via the Observation API — no separate count scan per stage."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
+        if self.is_done(stage):
+            return self.read(stage)
         t0 = time.time()
         obs = Observation()
         # zstd: checkpoints are write-once read-few; smaller files beat
         # snappy's decode speed when the bottleneck is storage bandwidth
         write_table(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            fn(*inputs).observe(obs, F.count(F.lit(1)).alias("rows")),
             self._dir(stage),
-            self.fmt,
             compression="zstd",
         )
         out = self.read(stage)
-        n = obs.get["rows"]
-        manifest = {
+        self._commit(stage, {
             "stage": stage,
-            "rows": n,
+            "rows": obs.get["rows"],
             "schema": out.schema.jsonValue(),
-            "format": self.fmt,
-            "wall_ms": wall_ms if wall_ms is not None else (time.time() - t0) * 1000.0,
-        }
-        tmp = self._manifest(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(stage))
+            "wall_ms": (time.time() - t0) * 1000.0,
+        })
         return out
-
-    def run_stage(self, stage: str, fn, *inputs: DataFrame) -> DataFrame:
-        """Resume-aware stage execution: skip + read-back when already done."""
-        if self.is_done(stage):
-            return self.read(stage)
-        t0 = time.time()
-        df = fn(*inputs)
-        return self.materialize(df, stage, wall_ms=(time.time() - t0) * 1000.0)
 
     def append(self, df: DataFrame, stage: str) -> int:
         """Delta-ingest append into a completed stage: the write job commits
@@ -205,29 +178,18 @@ class Checkpointer:
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        if self.fmt != "parquet":
-            # appending raw parquet files into e.g. an Iceberg table location
-            # would corrupt it; route non-parquet formats explicitly when the
-            # runtime ships the jar
-            raise NotImplementedError(
-                f"Checkpointer.append supports fmt='parquet' only, got {self.fmt!r}"
-            )
         obs = Observation()
-        (
-            df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
-            .option("compression", "zstd")
-            .parquet(self._dir(stage))
+        write_table(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            self._dir(stage),
+            mode="append",
+            compression="zstd",
         )
         n_new = obs.get["rows"]
-        with open(self._manifest(stage)) as f:
-            manifest = json.load(f)
+        manifest = self.manifest(stage)
         manifest["rows"] += n_new
         manifest["appends"] = manifest.get("appends", 0) + 1
-        tmp = self._manifest(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(stage))
+        self._commit(stage, manifest)
         return n_new
 
     def invalidate(self, *stages: str) -> None:

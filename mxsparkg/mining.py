@@ -25,8 +25,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pyarrow as pa
-from pyspark.broadcast import Broadcast
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mxsparkg.lexicons import build_lexicons
@@ -340,14 +339,6 @@ def rules_to_model(rules: DataFrame) -> list[dict]:
         }
         for r in guarded_collect(rules, "rules_to_model")
     ]
-
-
-def broadcast_mined_model(
-    spark: SparkSession, rules: DataFrame, pred_patterns: list[dict] | None = None
-) -> Broadcast:
-    from mxsparkg.detect import broadcast_model
-
-    return broadcast_model(spark, rules_to_model(rules), pred_patterns)
 
 
 # ===========================================================================

@@ -1,13 +1,21 @@
 """End-to-end pipeline tests (SURVEY.md §5.2 tiers 3-5): equivalence vs the
 single-node reference oracle, resume, partition invariance, plan hygiene."""
 
+import json
+import os
 import shutil
+import subprocess
+import sys
 
 import pyarrow.parquet as pq
 import pytest
 
 from mxsparkg.extract import extract_pages
-from mxsparkg.pipeline import run_pipeline, triples_for_eval
+from mxsparkg.pipeline import (
+    DEFAULT_CHECKPOINT_STAGES,
+    run_pipeline,
+    triples_for_eval,
+)
 from reference_impl.tagger import canon_from_aliases, run_reference, triple_prf
 
 CKPT = "/tmp/mxsparkg_test_ckpt"
@@ -85,6 +93,25 @@ def test_extracted_text_byte_identity(pipeline_result, tiny_fixtures):
         assert got[row["url"]] == row["text"]
 
 
+def _manifest(root, stage):
+    with open(f"{root}/{stage}._manifest.json") as f:
+        return json.load(f)
+
+
+def test_manifest_wall_is_metrics_wall(spark, pipeline_result):
+    """One stage record: every committed stage's `_metrics` rows carry the
+    wall_ms its manifest committed. Runs before any test that rewrites
+    the shared checkpoint's manifests."""
+    from mxsparkg.metrics import read_metrics
+
+    walls: dict = {}
+    for r in read_metrics(spark, CKPT).select("stage", "wall_ms").collect():
+        walls.setdefault(r["stage"], set()).add(r["wall_ms"])
+    assert walls == {
+        s: {_manifest(CKPT, s)["wall_ms"]} for s in DEFAULT_CHECKPOINT_STAGES
+    }
+
+
 def test_resume_skips_and_matches(spark, tiny_fixtures, pipeline_result):
     """Re-run against the same checkpoint root: all stages read back, output
     identical (north_rule checkpoint-resume)."""
@@ -101,8 +128,6 @@ def test_resume_skips_and_matches(spark, tiny_fixtures, pipeline_result):
 
 def test_partition_invariance(spark, tiny_fixtures, pipeline_result):
     """Results identical when the whole input is one partition."""
-    import os
-
     one = "/tmp/mxsparkg_test_onepart"
     shutil.rmtree(one, ignore_errors=True)
     os.makedirs(one)
@@ -124,8 +149,6 @@ def test_incremental_delta_ingest(spark, tiny_fixtures, pipeline_result):
     """J5/T2 delta resume: run on 60% of the corpus, then incrementally on
     the full corpus — only new urls are detected (append), downstream
     recomputes, final triples equal the full-run triples."""
-    import os
-
     root = "/tmp/mxsparkg_test_incr"
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
@@ -139,8 +162,6 @@ def test_incremental_delta_ingest(spark, tiny_fixtures, pipeline_result):
         f"{tiny_fixtures}/gold_canon.parquet",
         f"{root}/ckpt", with_metrics=False,
     )
-    import json
-
     with open(f"{root}/ckpt/detect._manifest.json") as f:
         rows_before = json.load(f)["rows"]
 
@@ -237,8 +258,6 @@ def test_zz_resume_after_midpipeline_death(spark, tiny_fixtures, pipeline_result
     the re-run recomputes only those and matches the original output.
     Runs LAST (zz): it rewrites the shared checkpoint dir, which
     invalidates other tests' lazily-read DataFrames."""
-    import os
-
     expected = _triples(pipeline_result["triples"])
     expected_nodes = pipeline_result["nodes"].count()
     for stage in ("canon_map", "triples", "edges", "nodes"):
@@ -266,39 +285,6 @@ def test_metrics_rows_written(spark, pipeline_result):
     assert isinstance(row["input_files"], list)
 
 
-def test_overlap_scheduling_equivalence(spark, tiny_fixtures):
-    """Concurrent stage scheduling (canon_map ∥ detect, nodes ∥
-    triples→edges) must produce byte-identical results to the sequential
-    path. Self-contained (own fresh checkpoints): earlier tests mutate the
-    shared module checkpoint, so pipeline_result's lazy frames can point
-    at overwritten files."""
-
-    def _run(ckpt, overlap):
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return run_pipeline(
-            spark,
-            f"{tiny_fixtures}/pages.parquet",
-            f"{tiny_fixtures}/entity_dict.parquet",
-            f"{tiny_fixtures}/gold_canon.parquet",
-            ckpt,
-            overlap_stages=overlap,
-        )
-
-    def _rows(df):
-        return {
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in df.collect()
-        }
-
-    seq = _run("/tmp/mxsparkg_test_ckpt_seq", False)
-    ovl = _run("/tmp/mxsparkg_test_ckpt_ovl", True)
-    assert _triples(seq["triples"]) == _triples(ovl["triples"])
-    for tbl in ("nodes", "edges", "canon_map"):
-        assert _rows(seq[tbl]) == _rows(ovl[tbl]), tbl
-    shutil.rmtree("/tmp/mxsparkg_test_ckpt_seq", ignore_errors=True)
-    shutil.rmtree("/tmp/mxsparkg_test_ckpt_ovl", ignore_errors=True)
-
-
 def test_pipeline_propagates_reliable_checkpoint(
     spark, tiny_fixtures, tmp_path, monkeypatch
 ):
@@ -323,9 +309,93 @@ def test_pipeline_propagates_reliable_checkpoint(
         f"{tiny_fixtures}/gold_canon.parquet",
         str(tmp_path / "ck"),
         with_metrics=False,
-        overlap_stages=False,
         reliable_checkpoint_dir=rck,
     )
     assert captured.get("reliable_checkpoint_dir") == rck
 
 
+
+
+def test_stage_wall_covers_the_write(spark, tmp_path):
+    """The manifest's wall_ms times the stage's execution, not only its
+    plan build: fn returns at once, the write job sleeps 1 s inside a
+    mapInArrow."""
+    import time
+
+    from mxsparkg.catalog import Checkpointer
+
+    def slow(batches):
+        time.sleep(1.0)
+        yield from batches
+
+    def fn(df):
+        return df.mapInArrow(slow, df.schema)
+
+    root = str(tmp_path / "ck")
+    Checkpointer(spark, root).run_stage(
+        "slow", fn, spark.range(10).coalesce(1)
+    )
+    m = _manifest(root, "slow")
+    assert m["rows"] == 10
+    assert m["wall_ms"] >= 1000, m["wall_ms"]
+
+
+@pytest.mark.parametrize("bad", ["node", "link_mentions"])
+def test_unknown_checkpoint_stage_raises(spark, tiny_fixtures, tmp_path, bad):
+    """A typo (or a name that is not a stage) must not silently drop a
+    checkpoint: run_pipeline refuses it before launching any job or
+    creating the checkpoint root."""
+    sc = spark.sparkContext
+    group = f"test_unknown_checkpoint_stage_raises_{bad}"
+    root = tmp_path / "ck"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=bad):
+            run_pipeline(
+                spark,
+                f"{tiny_fixtures}/pages.parquet",
+                f"{tiny_fixtures}/entity_dict.parquet",
+                f"{tiny_fixtures}/gold_canon.parquet",
+                str(root),
+                with_metrics=False,
+                checkpoint_stages=("detect", bad, "edges", "nodes"),
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not root.exists()
+
+
+def test_cli_summary_from_manifests(tiny_fixtures, tmp_path):
+    """jobs/pipeline.py end to end in its own JVM (local[2]): inline P/R
+    against gold, counts equal to the manifests' rows, and one wall per
+    committed stage."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = tmp_path / "ck"
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p
+        ),
+        "PYSPARK_SUBMIT_ARGS": "--master local[2] pyspark-shell",
+    }
+    proc = subprocess.run(
+        [
+            sys.executable, os.path.join(repo, "jobs", "pipeline.py"),
+            "--pages", f"{tiny_fixtures}/pages.parquet",
+            "--entity-dict", f"{tiny_fixtures}/entity_dict.parquet",
+            "--aliases", f"{tiny_fixtures}/gold_canon.parquet",
+            "--checkpoint", str(root),
+            "--gold", f"{tiny_fixtures}/gold_triples.parquet",
+        ],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert (out["precision"], out["recall"]) == (1.0, 1.0)
+    rows = {s: _manifest(root, s)["rows"] for s in DEFAULT_CHECKPOINT_STAGES}
+    assert out["triples_total"] == rows["triples"]
+    assert out["nodes"] == rows["nodes"]
+    assert out["edges"] == rows["edges"]
+    assert set(out["stage_walls"]) == set(DEFAULT_CHECKPOINT_STAGES)
+    assert all(w > 0 for w in out["stage_walls"].values())

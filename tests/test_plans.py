@@ -491,45 +491,6 @@ def test_profile_table_single_scan(spark):
     assert plan.count("Scan parquet") == 1, plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key at write time must equi-join
-    with ZERO Exchange on either side — the pay-the-shuffle-once-at-
-    ingest layout for the repeated joins (nodes⋈edges, subj⋈subj) that
-    dominate at 100 TB. The unbucketed control join over the same data
-    shuffles BOTH sides; the assertion pair proves the saving is the
-    bucketing's, not the data size's."""
-    from mxsparkg.catalog import write_bucketed
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "lang", "n_chars")
-    stats = docs.select(
-        "doc_id", (F.col("n_chars") * 2).alias("m")
-    )
-    try:
-        write_bucketed(docs, "t_docs_b", ["doc_id"], 4,
-                       sort_cols=["doc_id"])
-        write_bucketed(stats, "t_stats_b", ["doc_id"], 4,
-                       sort_cols=["doc_id"])
-        a, b = spark.table("t_docs_b"), spark.table("t_stats_b")
-        # merge hint: at sf0.001 AQE would broadcast the tiny side and
-        # hide the property under test — production bucket joins are
-        # exactly the joins too big to broadcast
-        plan = _plan(a.hint("merge").join(b, "doc_id"))
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        # control: the same merge join over the raw (unbucketed) frames
-        ctrl = _plan(
-            docs.hint("merge")
-            .join(stats.withColumnRenamed("m", "m2"), "doc_id")
-            .filter(F.col("m2") >= 0)  # defeat self-join dedup
-        )
-        assert "Exchange hashpartitioning" in ctrl, ctrl
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_docs_b")
-        spark.sql("DROP TABLE IF EXISTS t_stats_b")
-
-
 def test_heavy_hitters_recount_is_broadcast_semi(spark):
     """txt_heavy_hitters pass 2: the exact recount must semi-join the
     token stream against a BROADCAST candidate list (candidates are
