@@ -124,7 +124,6 @@ def run_once(cores: int, pages_path: str, fdir: str, zpath: str) -> dict:
             "--entity-dict", f"{fdir}/entity_dict.parquet",
             "--aliases", f"{fdir}/gold_canon.parquet",
             "--checkpoint", ckpt,
-            "--no-metrics",
             "--light-summary",
             # fold the triples materialization into the edges job: the
             # write+read of the largest intermediate is a fixed-cost tail

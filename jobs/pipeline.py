@@ -54,8 +54,6 @@ def main() -> None:
         help="mined pred_patterns.parquet from jobs/train.py "
              "--seed-relations (default: built-in hand list)",
     )
-    ap.add_argument("--no-metrics", action="store_true",
-                    help="skip per-partition metrics rows (bench runs)")
     ap.add_argument("--gold", default=None,
                     help="gold triples parquet: report P/R/F1 inline "
                          "(north_rule threshold 0.95)")
@@ -110,7 +108,6 @@ def main() -> None:
         args.checkpoint,
         rules=rules,
         pred_patterns=pred_patterns,
-        with_metrics=not args.no_metrics,
         langs=args.langs.split(",") if args.langs else None,
         incremental=args.incremental,
         reliable_checkpoint_dir=args.reliable_checkpoint,

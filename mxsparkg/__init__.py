@@ -16,7 +16,7 @@ Layout (SURVEY.md §7.0):
   link       — J1/U4/W1 dictionary+context entity linking, NIL handling
   graph      — G1 connected components (large/small-star), G2 rewrite, rollups
   mining     — M1 PrefixSpan rule mining + confidence scoring, M2 trie build
-  metrics    — U8/S6 per-partition lineage + metrics rows
+  metrics    — U8/S6 per-file lineage + metrics rows (driver-side, no job)
   pipeline   — lifecycle C: staged DAG with checkpoint/resume manifests
   contract   — driver-contract relational operators (SURVEY.md §2 keys)
   datapipe   — training-data ops: dedup, similarity search, text analysis,

@@ -12,6 +12,10 @@ its manifest exists; `Checkpointer.run_stage` overwrites the stage's
 parquet directory, then writes the manifest — the manifest write is the
 atomic commit point, so a killed job re-runs an incomplete stage from its
 inputs (idempotent overwrite). Checkpoints are always parquet.
+
+Committed stages are re-read with a known schema (the written frame's
+after the write, the manifest's `schema` on resume), never by inferring
+it from parquet footers, which would cost a Spark job per read.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
@@ -136,8 +141,15 @@ class Checkpointer:
         with open(self._manifest(stage)) as f:
             return json.load(f)
 
+    def _read(self, stage: str, schema: StructType) -> DataFrame:
+        # a given schema skips parquet's footer-inference job; Spark reads
+        # it back nullable, as the footer inference would
+        return self.spark.read.schema(schema).parquet(self._dir(stage))
+
     def read(self, stage: str) -> DataFrame:
-        return read_table(self.spark, self._dir(stage))
+        """The committed stage, read with its manifest's schema (no job)."""
+        return self._read(
+            stage, StructType.fromJson(self.manifest(stage)["schema"]))
 
     def run_stage(self, stage: str, fn, *inputs: DataFrame) -> DataFrame:
         """Resume-aware stage execution: read back when already done,
@@ -145,7 +157,9 @@ class Checkpointer:
         Returns the re-read DataFrame (truncates lineage — the Spark-batch
         analogue of a streaming checkpoint). The manifest's wall_ms covers
         the plan build and the write; the row count rides on the write job
-        via the Observation API — no separate count scan per stage."""
+        via the Observation API — no separate count scan per stage — and
+        the re-read takes the written frame's schema, so the write is the
+        stage's only Spark job."""
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
@@ -153,14 +167,15 @@ class Checkpointer:
             return self.read(stage)
         t0 = time.time()
         obs = Observation()
+        df = fn(*inputs)
         # zstd: checkpoints are write-once read-few; smaller files beat
         # snappy's decode speed when the bottleneck is storage bandwidth
         write_table(
-            fn(*inputs).observe(obs, F.count(F.lit(1)).alias("rows")),
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
             self._dir(stage),
             compression="zstd",
         )
-        out = self.read(stage)
+        out = self._read(stage, df.schema)
         self._commit(stage, {
             "stage": stage,
             "rows": obs.get["rows"],

@@ -75,6 +75,28 @@ def escape_literal(col: Column) -> Column:
     return F.replace(c, F.lit("\t"), F.lit("\\t"))
 
 
+# C0 control characters without a short escape in escape_literal: JSON
+# strings may not carry any U+0000-U+001F raw
+_C0_REST = tuple(i for i in range(0x20) if chr(i) not in "\n\r\t")
+
+
+def escape_json_literal(col: Column) -> Column:
+    """escape_literal, then every other C0 control character as \\u00XX,
+    so the literal is valid JSON string content."""
+    c = escape_literal(col)
+    for i in _C0_REST:
+        c = F.replace(c, F.lit(chr(i)), F.lit(f"\\u{i:04x}"))
+    return c
+
+
+def _escape_json_sql(esc: str) -> str:
+    """DuckDB mirror of escape_json_literal's C0 arm over the SQL
+    expression `esc` (escape_literal's replace chain)."""
+    for i in _C0_REST:
+        esc = f"replace({esc}, chr({i}), '\\u{i:04x}')"
+    return esc
+
+
 def to_ntriples(
     triples: DataFrame,
     subj: str = "subj",
@@ -1012,9 +1034,10 @@ def to_jsonld(
     N-Triples/N-Quads lines and Turtle blocks: one JSON node object per
     subject, `{"@id": s, p1: [o1, o2], p2: [...]}`, IRIs as `{"@id":...}`
     objects and literals as plain JSON strings (valid compact form). The
-    escape chain for JSON string content over this corpus is exactly the
-    N-Triples one (backslash-first, then quote/newline/CR/tab), so
-    escape_literal is reused — one discipline, three surfaces.
+    escape chain for JSON string content is the N-Triples one
+    (backslash-first, then quote/newline/CR/tab) plus a \\u00XX escape
+    for every other C0 control character (escape_json_literal), which
+    JSON forbids raw.
 
     PRECONDITION: subject/predicate/IRI-object strings are emitted into
     JSON verbatim, so they must already be JSON-clean — i.e. IRIs in a
@@ -1034,7 +1057,7 @@ def to_jsonld(
     else:
         rendered = F.when(
             F.col(obj_is_literal),
-            F.concat(F.lit('"'), escape_literal(o), F.lit('"')),
+            F.concat(F.lit('"'), escape_json_literal(o), F.lit('"')),
         ).otherwise(F.concat(F.lit('{"@id":"'), o, F.lit('"}')))
     per_pred = (
         triples.select(s.alias("subj"), p.alias("pred"), rendered.alias("r"))
@@ -1102,7 +1125,7 @@ def kg_jsonld(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def kg_jsonld_sql() -> str:
-    esc = (
+    esc = _escape_json_sql(
         "replace(replace(replace(replace(replace(obj,"
         " '\\', '\\\\'), '\"', '\\\"'), chr(10), '\\n'),"
         " chr(13), '\\r'), chr(9), '\\t')"

@@ -25,8 +25,14 @@ Scale design decisions (100 TB posture):
   threads): canon_map alongside detect, nodes alongside triples→edges.
   Measured on a 4-core box, the sequential order cost 27-40% more wall.
 - each committed stage has one record, its manifest: rows, schema and
-  wall_ms (plan build + write). The `_metrics` rows reuse that wall_ms;
-  a resumed run reports the walls of the run that committed each stage.
+  wall_ms (plan build + write). A resumed run reports the walls of the
+  run that committed each stage.
+- every Spark job of a run is a stage's own write. The `_metrics` rows
+  (one per output file: part number, footer row count, the manifest's
+  wall_ms, and as lineage the files of the stage's inputs from
+  `DataFrame.inputFiles()`) are built and written on the driver, and a
+  committed stage is re-read with a known schema instead of an inference
+  job (mxsparkg/metrics.py, mxsparkg/catalog.py).
 - hot keys in the shuffles (celebrity edges and nodes in the rollups, hub
   nodes in CC) are left to the engine: map-side partial aggregation plus
   AQE's skew-join split. User-level salting measured no better
@@ -35,7 +41,6 @@ Scale design decisions (100 TB posture):
 
 from __future__ import annotations
 
-import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,7 +64,6 @@ def run_pipeline(
     checkpoint_root: str,
     rules: list[dict] | None = None,
     pred_patterns: list[dict] | None = None,
-    with_metrics: bool = True,
     checkpoint_stages: tuple[str, ...] = DEFAULT_CHECKPOINT_STAGES,
     langs: list[str] | None = None,
     incremental: bool = False,
@@ -82,19 +86,17 @@ def run_pipeline(
     ck = Checkpointer(spark, checkpoint_root)
     model_bc = broadcast_model(spark, rules, pred_patterns)
     ckset = set(checkpoint_stages)
-    metrics_lock = threading.Lock()
 
     def stage(name: str, fn, *inputs: DataFrame) -> DataFrame:
         if name not in ckset:
             return fn(*inputs)
-        done_before = ck.is_done(name)
+        if ck.is_done(name):
+            return ck.read(name)
         out = ck.run_stage(name, fn, *inputs)
-        if with_metrics and not done_before:
-            # serialized: two concurrent append jobs into the same metrics
-            # table would race the file-commit protocol
-            with metrics_lock:
-                append_metrics(spark, checkpoint_root, out, name,
-                               ck.manifest(name)["wall_ms"])
+        append_metrics(
+            spark, checkpoint_root, out, name, ck.manifest(name)["wall_ms"],
+            input_files={f for df in inputs for f in df.inputFiles()},
+        )
         return out
 
     if pages_format == "warc":
@@ -180,13 +182,13 @@ def run_pipeline(
         # triples→edges chain, so the two branches overlap: the wall pays
         # max(triples+edges, nodes) instead of their sum, and each branch's
         # disk-bound checkpoint write overlaps the other's compute.
+        # canon_map is passed as a stage input so that its files are in
+        # the stage's lineage
         nodes_fut = pool.submit(
-            stage, "nodes", lambda m: G.materialize_nodes(m, canon_map),
-            linked,
+            stage, "nodes", G.materialize_nodes, linked, canon_map,
         )
         triples = stage(
-            "triples", lambda t: G.rewrite_canonical(t, canon_map),
-            triples_linked,
+            "triples", G.rewrite_canonical, triples_linked, canon_map,
         )
         edges = stage("edges", G.materialize_edges, triples)
         nodes = nodes_fut.result()

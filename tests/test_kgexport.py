@@ -354,6 +354,27 @@ def test_jsonld_round_trips_the_triple_set(spark, sf001):
     assert got == want
 
 
+def test_jsonld_escapes_every_c0_control_char(spark):
+    """JSON forbids raw U+0000-U+001F in strings: literals carrying
+    backspace, form feed, \\x01 (and the short-escaped tab/newline) must
+    still give docs that json.loads accepts and that round-trip."""
+    import json
+
+    from mxsparkg.kgexport import to_jsonld
+
+    lits = ["a\bb", "c\fd", "e\x01f", "g\x1fh\ti\nj\rk", 'q"\\']
+    df = spark.createDataFrame(
+        [("urn:s", "urn:p", v, True) for v in lits]
+        + [("urn:s", "urn:p", "urn:o", False)],
+        "subj string, pred string, obj string, lit boolean",
+    )
+    (row,) = to_jsonld(df, obj_is_literal="lit").collect()
+    node = json.loads(row.doc)
+    assert sorted(v for v in node["urn:p"] if isinstance(v, str)) == sorted(lits)
+    assert {"@id": "urn:o"} in node["urn:p"]
+    assert "\\u0008" in row.doc and "\\u000c" in row.doc
+
+
 def test_literal_norm_parses_and_rejects(spark, sf001):
     """Unit normalization: every well-formed literal lands in exact
     integer micrometers (si_um = qty_milli x um-factor), every corrupted

@@ -113,7 +113,6 @@ def test_ambiguous_dict_through_full_pipeline(spark, tmp_path):
         str(tmp_path / "dict.parquet"),
         str(tmp_path / "aliases.parquet"),
         str(tmp_path / "ckpt"),
-        with_metrics=False,
     )
     linked = {
         r["surface_norm"]: (r["entity_id"], r["link_score"])
@@ -163,7 +162,6 @@ def test_context_linking_corpus_scale(spark):
         f"{fdir}/entity_dict.parquet",
         f"{fdir}/gold_canon.parquet",
         f"{root}/ckpt",
-        with_metrics=False,
     )
     gold = {
         (r["url"], r["surface_norm"]): r["entity_id"]

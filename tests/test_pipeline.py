@@ -112,6 +112,88 @@ def test_manifest_wall_is_metrics_wall(spark, pipeline_result):
     }
 
 
+def test_metrics_rows_are_the_part_files(spark, pipeline_result):
+    """One `_metrics` row per part file of every committed stage, keyed by
+    its part number; the rows_out of a stage sum to its manifest's rows."""
+    from mxsparkg.metrics import read_metrics
+
+    rows = read_metrics(spark, CKPT).collect()
+    for s in DEFAULT_CHECKPOINT_STAGES:
+        parts = sorted(
+            int(f.split("-")[1])
+            for f in os.listdir(f"{CKPT}/{s}") if f.startswith("part-")
+        )
+        mine = [r for r in rows if r["stage"] == s]
+        assert sorted(r["partition_id"] for r in mine) == parts, s
+        assert sum(r["rows_out"] for r in mine) == _manifest(CKPT, s)["rows"]
+
+
+def test_detect_lineage_is_the_page_files(spark, tiny_fixtures,
+                                          pipeline_result):
+    """The detect rows' input_files are the page files it read, not its
+    own output files."""
+    from mxsparkg.metrics import read_metrics
+
+    pages = sorted(
+        spark.read.parquet(f"{tiny_fixtures}/pages.parquet").inputFiles())
+    detect = read_metrics(spark, CKPT).filter("stage = 'detect'").collect()
+    assert detect
+    assert all(r["input_files"] == pages for r in detect)
+
+
+def test_telemetry_launches_no_jobs(spark, pipeline_result, tmp_path):
+    """Reading a committed stage and appending its `_metrics` rows launch
+    no Spark job: the manifest carries the schema, and the rows come from
+    the driver's file listing and the parquet footers."""
+    from mxsparkg.catalog import Checkpointer
+    from mxsparkg.metrics import append_metrics, read_metrics
+
+    sc = spark.sparkContext
+    ck = Checkpointer(spark, CKPT)
+    for name, call in (
+        ("read", lambda: ck.read("edges")),
+        ("append_metrics", lambda: append_metrics(
+            spark, str(tmp_path), ck.read("edges"), "edges", 1.0)),
+    ):
+        group = f"test_telemetry_launches_no_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+    got = read_metrics(spark, str(tmp_path)).collect()
+    assert sum(r["rows_out"] for r in got) == _manifest(CKPT, "edges")["rows"]
+
+
+def test_concurrent_metrics_appends_all_land(spark, pipeline_result, tmp_path):
+    """append_metrics takes no lock: each call commits its own file, so
+    concurrent appends (the pipeline runs stages on two threads) lose no
+    rows."""
+    from collections import Counter
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mxsparkg.catalog import Checkpointer
+    from mxsparkg.metrics import append_metrics, read_metrics
+
+    edges = Checkpointer(spark, CKPT).read("edges")
+    n_files = len(edges.inputFiles())
+    stages = [f"s{i}" for i in range(32)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(append_metrics, spark, str(tmp_path), edges,
+                                s, 1.0) for s in stages]
+            for f in futs:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    got = Counter(r["stage"] for r in read_metrics(spark, str(tmp_path))
+                  .select("stage").collect())
+    assert got == {s: n_files for s in stages}
+
+
 def test_resume_skips_and_matches(spark, tiny_fixtures, pipeline_result):
     """Re-run against the same checkpoint root: all stages read back, output
     identical (north_rule checkpoint-resume)."""
@@ -140,7 +222,6 @@ def test_partition_invariance(spark, tiny_fixtures, pipeline_result):
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
         f"{one}/ckpt",
-        with_metrics=False,
     )
     assert _triples(res1["triples"]) == _triples(pipeline_result["triples"])
 
@@ -160,7 +241,7 @@ def test_incremental_delta_ingest(spark, tiny_fixtures, pipeline_result):
         spark, f"{root}/pages_sub.parquet",
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
-        f"{root}/ckpt", with_metrics=False,
+        f"{root}/ckpt",
     )
     with open(f"{root}/ckpt/detect._manifest.json") as f:
         rows_before = json.load(f)["rows"]
@@ -169,7 +250,7 @@ def test_incremental_delta_ingest(spark, tiny_fixtures, pipeline_result):
         spark, f"{tiny_fixtures}/pages.parquet",
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
-        f"{root}/ckpt", with_metrics=False, incremental=True,
+        f"{root}/ckpt", incremental=True,
     )
     with open(f"{root}/ckpt/detect._manifest.json") as f:
         m = json.load(f)
@@ -181,7 +262,7 @@ def test_incremental_delta_ingest(spark, tiny_fixtures, pipeline_result):
         spark, f"{tiny_fixtures}/pages.parquet",
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
-        f"{root}/ckpt", with_metrics=False, incremental=True,
+        f"{root}/ckpt", incremental=True,
     )
     assert _triples(res3["triples"]) == _triples(pipeline_result["triples"])
 
@@ -214,7 +295,6 @@ def test_lang_filter_pushed_to_scan(spark, tiny_fixtures):
         f"{tiny_fixtures}/gold_canon.parquet",
         "/tmp/mxsparkg_test_langckpt",
         langs=["fr"],
-        with_metrics=False,
         checkpoint_stages=(),
     )
     langs = {
@@ -235,7 +315,6 @@ def test_fold_triples_equivalence(spark, tiny_fixtures, pipeline_result, tmp_pat
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
         str(tmp_path / "fold_ck"),
-        with_metrics=False,
         checkpoint_stages=("detect", "canon_map", "edges", "nodes"),
     )
     base_edges = {
@@ -268,7 +347,6 @@ def test_zz_resume_after_midpipeline_death(spark, tiny_fixtures, pipeline_result
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
         CKPT,
-        with_metrics=False,
     )
     assert _triples(res["triples"]) == expected
     assert res["nodes"].count() == expected_nodes
@@ -308,7 +386,6 @@ def test_pipeline_propagates_reliable_checkpoint(
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
         str(tmp_path / "ck"),
-        with_metrics=False,
         reliable_checkpoint_dir=rck,
     )
     assert captured.get("reliable_checkpoint_dir") == rck
@@ -357,7 +434,6 @@ def test_unknown_checkpoint_stage_raises(spark, tiny_fixtures, tmp_path, bad):
                 f"{tiny_fixtures}/entity_dict.parquet",
                 f"{tiny_fixtures}/gold_canon.parquet",
                 str(root),
-                with_metrics=False,
                 checkpoint_stages=("detect", bad, "edges", "nodes"),
             )
     finally:
